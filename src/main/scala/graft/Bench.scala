@@ -422,19 +422,21 @@ object Bench {
     val timing = f""""wall_s":$wallS%.1f,""" +
       f""""gc_total_ms":${gcMs.values.sum},"run_ratio":$runRatio%.2f"""
     val json = s"""{"unit":"sec","sf":"$sfDir","queries":$qs,"top20_slowest":$top20,"regressions":$regressions,$timing,"timed_layer_rebuilds":$rb,"failed":$fj,"n_queries":${results.size},"metric":"total","value":$total}"""
-    println(json)
     // The driver retains only the final ~2000 bytes of this output — r20's
     // per-query map was truncated away and r21 lost its round-over-round
     // comparison entirely (PERF n_common = 0). Persist the full line to a
-    // well-known file so the map is always recoverable from the tree; the
-    // stdout contract above is unchanged. Full-run only: a SPARK_GRAFT_ONLY
+    // well-known file so the map is always recoverable from the tree (its
+    // absolute path goes to stderr); the stdout contract is unchanged and
+    // the JSON stays the last line. Full-run only: a SPARK_GRAFT_ONLY
     // dev/adjudication slice must never shadow the last full capture.
     if (only.isEmpty) try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
-        (json + "\n").getBytes("UTF-8"))
+      val last = java.nio.file.Paths.get("BENCH_LAST.json").toAbsolutePath
+      java.nio.file.Files.write(last, (json + "\n").getBytes("UTF-8"))
+      System.err.println(s"[bench] wrote $last")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_LAST.json write failed: ${e.getMessage}")
     }
+    println(json)
     if (failed.nonEmpty) sys.exit(1)
   }
 }

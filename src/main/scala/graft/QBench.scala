@@ -49,7 +49,7 @@ object QBench {
             val dur = (for (s <- si.submissionTime; c <- si.completionTime)
               yield c - s).getOrElse(-1L)
             def acc(n: String): Long = si.accumulables.values
-              .find(_.name.contains(n)).flatMap(_.value)
+              .find(_.name.exists(_.contains(n))).flatMap(_.value)
               .map(_.toString.toLong).getOrElse(0L)
             println(f"PROF stage=${si.stageId}%4d dur=${dur}%6dms " +
               f"tasks=${si.numTasks}%4d " +

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable._
+import graft.streaming.{GatedReplay, StreamingOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -281,6 +282,28 @@ object AdvancedQueries {
     base
   }
 
+  /** Lands `orders` as KV ingest batch `b` under `in`: a staged text
+    * write (into `files` files when > 0), renamed to sequenced
+    * `b<b>_<i>.txt` names — the rotation contract the KV stream source's
+    * offsets require. */
+  private def landKv(s: org.apache.spark.sql.SparkSession, in: String,
+      b: Int, orders: DataFrame, files: Int = 0): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(s"$in/_stage$b")
+    val fs = stage.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val kv = orders.select(concat_ws("\t", col("o_orderpriority"),
+      cents(col("o_totalprice")).cast("string")).as("v"))
+    (if (files > 0) kv.repartition(files) else kv)
+      .write.mode("overwrite").text(stage.toString)
+    fs.listStatus(stage)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
+        fs.rename(st.getPath,
+          new org.apache.hadoop.fs.Path(in, f"b$b%04d_$i%05d.txt"))
+      }
+    fs.delete(stage, true)
+  }
+
   def queries: Map[String, Q] = Map(
     // CUBE over two dimensions + grouping flags (SURVEY §2.2 "grouping
     // sets/cube/rollup" row; rollup lives in Relational.q_rollup).
@@ -513,49 +536,18 @@ object AdvancedQueries {
     // aggregate over the stream must equal the batch ground truth — a
     // dropped or double-claimed file shows as a count/sum mismatch.
     "q_stream_kv" -> { (s, dir) =>
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_kv-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        tmp.toURI, s.sparkContext.hadoopConfiguration)
-      def writeBatch(b: Int, df: DataFrame): Unit = {
-        val stage = new org.apache.hadoop.fs.Path(s"$tmp/_stage$b")
-        df.select(concat_ws("\t", col("o_orderpriority"),
-            cents(col("o_totalprice")).cast("string")).as("v"))
-          .write.mode("overwrite").text(stage.toString)
-        fs.listStatus(stage)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              tmp.toString, f"b$b%04d_$i%05d.txt"))
-          }
-        fs.delete(stage, true)
-      }
+      val r = GatedReplay(s, "q_stream_kv")
       val orders = Tables(s, dir, "orders")
-      val qn = s"q_stream_kv_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream
-          .format(classOf[graft.sources.KvTextSource].getName)
-          .load(tmp.toString)
-          .groupBy(col("key"))
-          .agg(count(lit(1)).as("n_orders"),
-            sum(col("value")).as("sum_cents"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          writeBatch(1, orders.where(pmod(col("o_orderkey"), lit(2)) === 0))
-          q.processAllAvailable()
-          writeBatch(2, orders.where(pmod(col("o_orderkey"), lit(2)) === 1))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).orderBy("key")
+      val agg = s.readStream
+        .format(classOf[graft.sources.KvTextSource].getName)
+        .load(r.in)
+        .groupBy(col("key"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("value")).as("sum_cents"))
+      r.memory(agg, "complete", Seq(0, 1).map(m => () =>
+        landKv(s, r.in, m + 1,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === m))))
+        .orderBy("key")
     },
 
     // ADMISSION CONTROL through the micro-batch source
@@ -569,50 +561,23 @@ object AdvancedQueries {
     // still equal the batch ground truth, so a file skipped or re-claimed
     // across paced frontiers hash-fails.
     "q_stream_kv_paced" -> { (s, dir) =>
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_kvpace-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        tmp.toURI, s.sparkContext.hadoopConfiguration)
-      val stage = new org.apache.hadoop.fs.Path(s"$tmp/_stage")
-      Tables(s, dir, "orders")
-        .select(concat_ws("\t", col("o_orderpriority"),
-          cents(col("o_totalprice")).cast("string")).as("v"))
-        .repartition(6)
-        .write.mode("overwrite").text(stage.toString)
-      fs.listStatus(stage)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
-          fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-            tmp.toString, f"b0001_$i%05d.txt"))
-        }
-      fs.delete(stage, true)
-      val qn = s"q_stream_kv_paced_${System.nanoTime()}"
-      val q = graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val query = s.readStream
-          .format(classOf[graft.sources.KvTextSource].getName)
-          .option("maxFilesPerTrigger", "2")
-          .load(tmp.toString)
-          .where(col("value") >= 5000000L)
-          .groupBy(col("key"))
-          .agg(count(lit(1)).as("n_orders"),
-            sum(col("value")).as("sum_cents"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try query.processAllAvailable() finally query.stop()
-        query
-      }
+      val r = GatedReplay(s, "q_stream_kv_paced")
+      landKv(s, r.in, 1, Tables(s, dir, "orders"), files = 6)
+      val agg = s.readStream
+        .format(classOf[graft.sources.KvTextSource].getName)
+        .option("maxFilesPerTrigger", "2")
+        .load(r.in)
+        .where(col("value") >= 5000000L)
+        .groupBy(col("key"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("value")).as("sum_cents"))
+      val q = r.run(Seq(GatedReplay.Drain))(r.toMemory(agg, "complete"))
+      val out = r.result(q)
       val paced = q.recentProgress.count(_.numInputRows > 0)
       require(paced == 3,
         s"6 files at maxFilesPerTrigger=2 must drain in 3 micro-batches, " +
           s"saw $paced — admission control did not pace the backlog")
-      s.table(qn).orderBy("key")
+      out.orderBy("key")
     },
 
     // The custom connector as a STREAMING SINK (KvStreamingWrite): the
@@ -643,22 +608,29 @@ object AdvancedQueries {
     // checkpoint + write-once epoch dirs, the engine's standing pattern.
     "q_stream_snapshot_cdf" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapcdf-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val base = s"$root/tbl"
+      val r = GatedReplay(s, "q_stream_snapshot_cdf")
+      val base = s"${r.dir}/tbl"
       new java.io.File(base).mkdirs()
-      val epochs = s"$root/epochs"
+      val epochs = s"${r.dir}/epochs"
       val key = "o_orderkey"
       val slices = snapCdfSliceLayer(s, dir) // write-once input data
       val fmt = classOf[graft.sources.SnapshotCdfSource].getName
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream.format(fmt).load(base)
-          .writeStream.option("checkpointLocation", s"$root/cp")
+      r.run(Seq(
+        () => ST.commit(s, base, 1, ST.Snapshot(Seq(s"$slices/d0"), Nil)),
+        () => ST.commit(s, base, 2,
+          ST.Snapshot(Seq(s"$slices/d0", s"$slices/d1"), Nil)),
+        () => {
+          val v = ST.deleteWhere(s, base, key,
+            pmod(md5Long(col(key).cast("string")), lit(5)) === 3)
+          require(v == 3, s"delete landed at v$v, expected v3")
+        },
+        () => {
+          val s3 = ST.manifest(s, base, 3)
+          ST.commit(s, base, 4,
+            s3.copy(dataDirs = s3.dataDirs :+ s"$slices/d2"))
+        })) {
+        s.readStream.format(fmt).load(base)
+          .writeStream.option("checkpointLocation", s"${r.dir}/cp")
           .foreachBatch { (b: DataFrame, _: Long) =>
             val vs = b.select("version").collect()
               .map(_.getLong(0).toInt).toSeq.sorted
@@ -673,21 +645,6 @@ object AdvancedQueries {
               }
             }
           }.start()
-        try {
-          ST.commit(s, base, 1, ST.Snapshot(Seq(s"$slices/d0"), Nil))
-          q.processAllAvailable()
-          ST.commit(s, base, 2,
-            ST.Snapshot(Seq(s"$slices/d0", s"$slices/d1"), Nil))
-          q.processAllAvailable()
-          val v = ST.deleteWhere(s, base, key,
-            pmod(md5Long(col(key).cast("string")), lit(5)) === 3)
-          require(v == 3, s"delete landed at v$v, expected v3")
-          q.processAllAvailable()
-          val s3 = ST.manifest(s, base, 3)
-          ST.commit(s, base, 4,
-            s3.copy(dataDirs = s3.dataDirs :+ s"$slices/d2"))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       require((1 to 4).forall(v =>
         new java.io.File(s"$epochs/v$v/_SUCCESS").exists),
@@ -717,16 +674,10 @@ object AdvancedQueries {
     // each batch is O(manifest) pointers, each fold O(delta dirs).
     "q_stream_snapshot_branch" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapbr-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val base = s"$root/tbl"
+      val r = GatedReplay(s, "q_stream_snapshot_branch")
+      val base = s"${r.dir}/tbl"
       new java.io.File(base).mkdirs()
-      val epochs = s"$root/epochs"
+      val epochs = s"${r.dir}/epochs"
       val key = "o_orderkey"
       val slices = snapCdfSliceLayer(s, dir) // write-once input data
       val fmt = classOf[graft.sources.SnapshotCdfSource].getName
@@ -746,39 +697,29 @@ object AdvancedQueries {
               .write.mode("overwrite").parquet(out)
         }
       }
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        def start(sink: Option[scala.collection.mutable
-            .ListBuffer[Int]]) =
-          s.readStream.format(fmt).option("startingRef", "audit")
-            .load(base)
-            .writeStream.option("checkpointLocation", s"$root/cp")
-            .foreachBatch((b: DataFrame, _: Long) => fold(b, sink))
-            .start()
-        val q1 = start(None)
-        try {
-          // branch commit 1: append slice d1 (bb v2)
-          val m1 = ST.manifest(s, bb, 1)
-          ST.commit(s, bb, 2, m1.copy(dataDirs = m1.dataDirs :+
-            s"$slices/d1"))
-          q1.processAllAvailable()
-        } finally q1.stop()
-        require(new java.io.File(s"$epochs/v2/_SUCCESS").exists,
-          "the first query must fold the pre-restart branch commit")
-        // branch commit 2 lands while NO query runs (the restart gap)
-        val v3 = ST.deleteWhere(s, bb, key,
-          pmod(md5Long(col(key).cast("string")), lit(7)) === 2)
-        require(v3 == 3, s"branch delete landed at v$v3, expected v3")
-        // restart: same checkpoint — resumes at the committed frontier
-        val q2 = start(Some(seen2))
-        try {
-          q2.processAllAvailable()
-          // branch commit 3: append slice d2 (bb v4), observed live
-          val m3 = ST.manifest(s, bb, 3)
-          ST.commit(s, bb, 4, m3.copy(dataDirs = m3.dataDirs :+
-            s"$slices/d2"))
-          q2.processAllAvailable()
-        } finally q2.stop()
-      }
+      def start(sink: Option[scala.collection.mutable.ListBuffer[Int]]) =
+        s.readStream.format(fmt).option("startingRef", "audit")
+          .load(base)
+          .writeStream.option("checkpointLocation", s"${r.dir}/cp")
+          .foreachBatch((b: DataFrame, _: Long) => fold(b, sink))
+          .start()
+      // branch commit 1: append slice d1 (bb v2)
+      r.run(Seq { () =>
+        val m1 = ST.manifest(s, bb, 1)
+        ST.commit(s, bb, 2, m1.copy(dataDirs = m1.dataDirs :+ s"$slices/d1"))
+      })(start(None))
+      require(new java.io.File(s"$epochs/v2/_SUCCESS").exists,
+        "the first query must fold the pre-restart branch commit")
+      // branch commit 2 lands while NO query runs (the restart gap)
+      val v3 = ST.deleteWhere(s, bb, key,
+        pmod(md5Long(col(key).cast("string")), lit(7)) === 2)
+      require(v3 == 3, s"branch delete landed at v$v3, expected v3")
+      // restart: same checkpoint — resumes at the committed frontier, then
+      // branch commit 3 appends slice d2 (bb v4), observed live
+      r.run(Seq(GatedReplay.Drain, { () =>
+        val m3 = ST.manifest(s, bb, 3)
+        ST.commit(s, bb, 4, m3.copy(dataDirs = m3.dataDirs :+ s"$slices/d2"))
+      }))(start(Some(seen2)))
       val got2 = seen2.synchronized { seen2.toList }
       require(!got2.contains(2),
         s"restart re-delivered the committed v2 window: $got2")
@@ -813,40 +754,31 @@ object AdvancedQueries {
     // shifts every later offset and hash-fails. One packer per shard =
     // the 100 TB shape (no global state; parallelism = shard count).
     "q_stream_pack" -> { (s, dir) =>
-      import graft.streaming.StreamingOps
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_pack-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val out = s"$root/out"
+      val r = GatedReplay(s, "q_stream_pack")
+      val out = s"${r.dir}/out"
       val slices = packSliceLayer(s, dir)
       for (k <- 0 to 2) {
         val part = new java.io.File(s"$slices/d$k").listFiles
           .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(in, s"b$k.parquet")
+        val dst = new java.io.File(r.in, s"b$k.parquet")
         java.nio.file.Files.copy(part.toPath, dst.toPath): Unit
         // one file = one micro-batch, in slice order (the ordered-arrival
         // contract) — the file source claims oldest-mtime first
         require(dst.setLastModified(1000000L * (k + 1)), "mtime pin failed")
       }
       val schema = s.read.parquet(s"$slices/d0").schema
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        import s.implicits._
-        val docs = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(in.toString)
-          .select(col("shard"), col("doc_id"), col("n"))
-          .as[StreamingOps.PackDoc]
-        val q = StreamingOps.packOffsets(docs)
-          .writeStream.option("checkpointLocation", s"$root/cp")
+      import s.implicits._
+      val docs = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(r.in)
+        .select(col("shard"), col("doc_id"), col("n"))
+        .as[StreamingOps.PackDoc]
+      r.run(Seq(GatedReplay.Drain)) {
+        StreamingOps.packOffsets(docs)
+          .writeStream.option("checkpointLocation", s"${r.dir}/cp")
           .format("parquet").option("path", out)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        try q.awaitTermination() finally q.stop()
       }
       val offs = s.read.parquet(out)
       // exactly-once pin: one offset per doc, no replays
@@ -879,15 +811,8 @@ object AdvancedQueries {
     // leaked uncommitted epoch.
     "q_stream_snapshot_ingest" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapingest-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val base = s"$root/tbl"; new java.io.File(base).mkdirs()
+      val r = GatedReplay(s, "q_stream_snapshot_ingest")
+      val base = s"${r.dir}/tbl"; new java.io.File(base).mkdirs()
       val slices = snapCdfSliceLayer(s, dir) // write-once input data
       // stage every slice file up front (AvailableNow freezes the listing
       // at start, so there is no copy/trigger race to pace around)
@@ -897,22 +822,21 @@ object AdvancedQueries {
              if f.getName.endsWith(".parquet")) {
         n += 1
         java.nio.file.Files.copy(f.toPath,
-          new java.io.File(in, s"d${m}_$n.parquet").toPath): Unit
+          new java.io.File(r.in, s"d${m}_$n.parquet").toPath): Unit
       }
       val perTrigger = math.max(1, (n + 2) / 3)
       val expectBatches = (n + perTrigger - 1) / perTrigger
       val schema = s.read.parquet(s"$slices/d0").schema
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
+      r.run(Seq(GatedReplay.Drain)) {
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", perTrigger)
-          .parquet(in.toString)
-          .writeStream.option("checkpointLocation", s"$root/cp")
+          .parquet(r.in)
+          .writeStream.option("checkpointLocation", s"${r.dir}/cp")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
             ST.ingestBatch(s, base, b, id,
               statsCol = Some("o_orderkey")): Unit
           }.start()
-        try q.awaitTermination() finally q.stop()
       }
       val head = ST.headVersion(s, base)
       require(head == expectBatches,
@@ -935,47 +859,18 @@ object AdvancedQueries {
     },
 
     "q_stream_kv_sink" -> { (s, dir) =>
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_kvsink-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val out = new java.io.File(root, "out"); out.mkdirs()
-      val cp = new java.io.File(root, "cp")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        root.toURI, s.sparkContext.hadoopConfiguration)
-      def writeBatch(b: Int, df: DataFrame): Unit = {
-        val stage = new org.apache.hadoop.fs.Path(s"$in/_stage$b")
-        df.select(concat_ws("\t", col("o_orderpriority"),
-            cents(col("o_totalprice")).cast("string")).as("v"))
-          .write.mode("overwrite").text(stage.toString)
-        fs.listStatus(stage)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              in.toString, f"b$b%04d_$i%05d.txt"))
-          }
-        fs.delete(stage, true)
-      }
+      val r = GatedReplay(s, "q_stream_kv_sink")
+      val out = new java.io.File(r.dir, "out"); out.mkdirs()
       val orders = Tables(s, dir, "orders")
       val fmt = classOf[graft.sources.KvTextSource].getName
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream.format(fmt).load(in.toString)
+      r.run(Seq(0, 1).map(m => () => landKv(s, r.in, m + 1,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === m)))) {
+        s.readStream.format(fmt).load(r.in)
           .where(col("value") >= 15000000L)
           .writeStream.format(fmt)
-          .option("checkpointLocation", cp.toString)
+          .option("checkpointLocation", s"${r.dir}/cp")
           .outputMode("append")
           .start(out.toString)
-        try {
-          writeBatch(1, orders.where(pmod(col("o_orderkey"), lit(2)) === 0))
-          q.processAllAvailable()
-          writeBatch(2, orders.where(pmod(col("o_orderkey"), lit(2)) === 1))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       s.read.format(fmt).load(out.toString)
         .groupBy(col("key"))
@@ -998,43 +893,29 @@ object AdvancedQueries {
     // the final state hash-gates against the full relational replay.
     "q_stream_to_table" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_totable-$sfN")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val cp = new java.io.File(root, "cp")
-      val catRoot = new java.io.File(root, "cat")
-      // catalog instances cache per NAME with their options snapshot —
-      // the name embeds the sf so the root stays stable for the session
-      val cat = s"gstbl${sfN.replace(".", "")}"
+      val r = GatedReplay(s, "q_stream_to_table")
+      // catalog instances cache per NAME with their options snapshot, so
+      // one name roots at this JVM's scratch root (the same for every
+      // run) and each run's table is named after its run dir
+      val cat = "gstbl"
+      val catRoot = r.dir.getParent
+      val tbl = s"$cat.${r.dir.getName.replaceAll("[^A-Za-z0-9]", "_")}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", catRoot.toString)
-      s.sql(s"CREATE TABLE $cat.orders_s (key STRING, cents BIGINT)")
+      s.conf.set(s"spark.sql.catalog.$cat.root", catRoot)
+      s.sql(s"CREATE TABLE $tbl (key STRING, cents BIGINT)")
       val orders = Tables(s, dir, "orders")
       val kv = orders.select(col("o_orderpriority").as("key"),
         cents(col("o_totalprice")).as("cents"))
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        kv.where(pmod(col("cents"), lit(2)) === 0)
-          .write.parquet(s"$in/b1.parquet")
-        val q = s.readStream.schema(kv.schema).parquet(s"$in/*.parquet")
+      r.run(Seq(0, 1).map(m =>
+          r.land(kv.where(pmod(col("cents"), lit(2)) === m)))) {
+        r.fileStream(kv.schema)
           .writeStream
-          .option("checkpointLocation", cp.toString)
+          .option("checkpointLocation", s"${r.dir}/cp")
           .outputMode("append")
-          .toTable(s"$cat.orders_s")
-        try {
-          q.processAllAvailable()
-          kv.where(pmod(col("cents"), lit(2)) === 1)
-            .write.parquet(s"$in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
+          .toTable(tbl)
       }
-      val base = s"$catRoot/orders_s"
+      val base = s"$catRoot/${tbl.stripPrefix(s"$cat.")}"
       val head = ST.headVersion(s, base)
       val snap = ST.manifest(s, base, head)
       require(snap.dataDirs.count(_.contains("_streamepoch_")) >= 2,
@@ -1043,7 +924,7 @@ object AdvancedQueries {
         "epoch folds must carry row counts (metadata COUNT stays exact)")
       s.sql(s"""SELECT key, COUNT(*) AS n_orders,
         |  CAST(SUM(cents) AS BIGINT) AS sum_cents
-        |FROM $cat.orders_s GROUP BY key ORDER BY key""".stripMargin)
+        |FROM $tbl GROUP BY key ORDER BY key""".stripMargin)
     },
 
     // DSv2 AGGREGATE pushdown (KvScanBuilder with
@@ -2036,23 +1917,22 @@ object AdvancedQueries {
           .write.mode("overwrite").text(src)
       }
       val fmt = classOf[graft.sources.KvTextSource].getName
-      val run = s"/root/repo/target/tmp/kvdel_run-$sfN"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(run))
+      // the run's own copy under a table named after its run dir, so
+      // concurrent runs share neither files nor a catalog entry
+      val run = GatedReplay.scratch("q_dsv2_delete")
       s.read.format(fmt).load(src)
-        .write.format(fmt).mode("overwrite").save(run)
-      val tbl = s"kv_del_orders_${sfN.replaceAll("[^A-Za-z0-9]", "_")}"
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"CREATE TABLE $tbl USING $fmt OPTIONS (path '$run')")
+        .write.format(fmt).mode("overwrite").save(s"$run/kv")
+      val tbl = s"kv_del_${run.getName.replaceAll("[^A-Za-z0-9]", "_")}"
+      s.sql(s"CREATE TABLE $tbl USING $fmt OPTIONS (path '$run/kv')")
       s.sql(s"DELETE FROM $tbl " +
         "WHERE value < 10000000 OR key = '1-URGENT'")
-      s.sql(
+      // the analyzed result scans the path; the external table's entry
+      // is dropped, its files stay
+      try s.sql(
         s"""SELECT key, COUNT(*) AS n_orders,
            |  CAST(SUM(value) AS BIGINT) AS sum_cents
            |FROM $tbl GROUP BY key ORDER BY key""".stripMargin)
+      finally { s.sql(s"DROP TABLE $tbl"): Unit }
     },
 
     // RUNTIME (DPP-shaped) filtering through the DSv2 seam: the KV scan
@@ -2945,14 +2825,7 @@ object AdvancedQueries {
     // construction and pinned in the oracle.
     "q_vacuum" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val base =
-        s"/root/repo/target/tmp/orders_vac-${new java.io.File(dir).getName}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      val bf = new java.io.File(base)
-      if (bf.exists) rm(bf)
+      val base = GatedReplay.scratch("q_vacuum").toString
       val cut = "1996-01-01"
       val o = Tables(s, dir, "orders")
       o.where(col("o_orderdate") < lit(cut))

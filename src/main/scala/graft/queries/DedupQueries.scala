@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable._
+import graft.streaming.{GatedReplay, StreamingOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -722,34 +723,10 @@ object DedupQueries {
     // claim streaming state makes and a stateless re-run would break.
     "q_stream_dedup" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_dedup-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val median = docs
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
-        .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
-      val qn = s"q_stream_dedup_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.dedupStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          docs.where(col("doc_id") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      val r = GatedReplay(s, "q_stream_dedup")
+      val p = GatedReplay.prelude(docs, "doc_id", 0.5)
+      r.memory(StreamingOps.dedupStream(r.fileStream(docs.schema)), "append",
+        r.split(docs, "doc_id", p.cuts))
         .groupBy(col("norm_md5"))
         .agg(count(lit(1)).as("n_emits"))
         .orderBy("norm_md5")
@@ -778,45 +755,23 @@ object DedupQueries {
     // over the index lifetime, never the whole base per fold.
     "q_stream_dedup_lsh" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_lsh-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val r = GatedReplay(s, "q_stream_dedup_lsh")
       // terciles, not a median split: THREE ingest batches so the third
       // probes a freshly COMPACTED index (compactEvery = 2 folds epochs
       // 0-1 into generation r=0-1 before batch 3 arrives) — the
       // consolidation path runs inside the gated execution, not only in
       // specs
-      val cuts = docs.selectExpr(
-        "CAST(percentile_cont(0.3333) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)",
-        "CAST(percentile_cont(0.6667) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
-        .head()
-      val (t1, t2) = (cuts.getLong(0), cuts.getLong(1))
-      val st = s"$tmp/state"
-      val q = s.readStream.schema(schema).parquet(s"$tmp/in/*.parquet")
-        .writeStream
-        .foreachBatch { (b: DataFrame, epochId: Long) =>
-          lshIngestBatch(st, s"$tmp/out", b, epochId, compactEvery = 2)
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        try {
-          docs.where(col("doc_id") <= t1).write.parquet(s"$tmp/in/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > t1 && col("doc_id") <= t2)
-            .write.parquet(s"$tmp/in/b2.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > t2).write.parquet(s"$tmp/in/b3.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
+      val p = GatedReplay.prelude(docs, "doc_id", 0.3333, 0.6667)
+      r.run(r.split(docs, "doc_id", p.cuts)) {
+        r.fileStream(docs.schema).writeStream
+          .foreachBatch { (b: DataFrame, epochId: Long) =>
+            lshIngestBatch(s"${r.dir}/state", s"${r.dir}/out", b, epochId,
+              compactEvery = 2)
+          }
+          .option("checkpointLocation", s"${r.dir}/ckpt")
+          .start()
       }
-      s.read.parquet(s"$tmp/out")
+      s.read.parquet(s"${r.dir}/out")
         .select(col("doc_a"), col("doc_b"), col("jac"))
         .orderBy("doc_a", "doc_b")
     },

@@ -1,7 +1,12 @@
 package graft.queries
 
+import scala.concurrent.duration.DurationInt
+
 import graft.{Q, Tables}
 import graft.functions.Portable._
+import graft.streaming.{GatedReplay, StreamingOps}
+import graft.streaming.GatedReplay.Flush
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,6 +33,17 @@ object EventQueries {
     * ts_us (epoch micros) + exact val_cents. */
   private def normalized(s: org.apache.spark.sql.SparkSession, dir: String) =
     events(s, dir).withColumn("val_cents", cents(col("value")))
+
+  /** Watermark movers for the flushed streaming gates: one events-schema
+    * row per event type at `ts`, under reserved negative event/user ids the
+    * gates filter from their output. */
+  private def sentinelEvents(s: SparkSession, types: String*)(ts: Long)
+      : DataFrame =
+    types.zipWithIndex.map { case (t, i) =>
+      s.range(1).select(lit(-1L - i).as("event_id"), lit(ts).as("ts"),
+        lit(-1L - i).as("user_id"), lit(t).as("event_type"),
+        lit(0.0).as("value"), lit("{}").as("props"))
+    }.reduce(_.union(_))
 
   def queries: Map[String, Q] = Map(
     // tumbling 1-hour windows (EventOps.windowed): one algebraic hash
@@ -72,38 +88,17 @@ object EventQueries {
     // the batch join oracle.
     "q_stream_enrich" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_enrich-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val median = ev
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
-        .head().getLong(0)
+      val r = GatedReplay(s, "q_stream_enrich")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
       val cust = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = r.fileStream(ev.schema)
         .withColumn("val_cents", cents(col("value")))
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("val_cents")).as("val_sum_cents"))
-      val qn = s"q_stream_enrich_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).orderBy("c_mktsegment", "event_type")
+      r.memory(stream, "complete", r.split(ev, "ts", p.cuts))
+        .orderBy("c_mktsegment", "event_type")
     },
 
     // Peak concurrent sessions per hour (EventOps.peakConcurrency) over the
@@ -210,55 +205,22 @@ object EventQueries {
     "q_stream_sessions" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sess-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_sessions")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
         .withColumn("val_cents", cents(col("value")))
         .select(col("user_id"), col("event_id"), col("ts_us"),
           col("val_cents"), col("ts_t"))
-        .as[graft.streaming.StreamingOps.Ev]
-      val qn = s"q_stream_sessions_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.sessionize(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
+        .as[StreamingOps.Ev]
+      // an open session flushes once the watermark passes last + gap
+      val plan = StreamingOps.sessionize(stream)
+      val flush = Flush(step = 1.hour, reach = 30.minutes)
+      r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(plan, flush, p.max)(sentinelEvents(s, "click")))
+        .where(col("user_id") >= 0)
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"), col("val_sum"))
         .orderBy("user_id", "sess_start_us")
@@ -274,28 +236,9 @@ object EventQueries {
     // session windows), one session semantics.
     "q_stream_session_window" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sessw-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val agg = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_session_window")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val agg = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
@@ -315,26 +258,10 @@ object EventQueries {
           (sum(col("val_cents")).cast("double") / lit(100.0)).as("val_sum"))
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"), col("val_sum"))
-      val qn = s"q_stream_session_window_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
-        .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
-          col("n_events"), col("val_sum"))
+      val flush = Flush(step = 1.hour, reach = 30.minutes + 1.microsecond)
+      r.memory(agg, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(agg, flush, p.max)(sentinelEvents(s, "click")))
+        .where(col("user_id") >= 0)
         .orderBy("user_id", "sess_start_us")
     },
 
@@ -349,58 +276,24 @@ object EventQueries {
     "q_stream_topk" -> { (s, dir) =>
       import s.implicits._
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_topk-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_topk")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
         .withColumn("val_cents", cents(col("value")))
         .select(col("user_id"), col("event_id"), col("ts_us"),
           col("val_cents"), col("ts_t"))
-        .as[graft.streaming.StreamingOps.Ev]
-      val emitAtMs = maxTs / 1000000L + 60000L
-      val qn = s"q_stream_topk_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        graft.streaming.StreamingOps.withRocksDbState(s) {
-          val q = graft.streaming.StreamingOps
-            .topKPerUser(stream, 3, emitAtMs)
-            .writeStream.outputMode("append")
-            .format("memory").queryName(qn).start()
-          try {
-            ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-            q.processAllAvailable()
-            ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-            q.processAllAvailable()
-            sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-              .write.parquet(s"$tmp/b3.parquet")
-            q.processAllAvailable()
-            sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-              .write.parquet(s"$tmp/b4.parquet")
-            q.processAllAvailable()
-          } finally q.stop()
-        }
-      }
-      s.table(qn).where(col("user_id") >= 0)
+        .as[StreamingOps.Ev]
+      // every key's timer fires one minute past the last event
+      val emitAtMs = p.max / 1000000L + 60000L
+      val flush = Flush(step = 1.hour, reach = 1.minute)
+      StreamingOps.withRocksDbState(s) {
+        val plan = StreamingOps.topKPerUser(stream, 3, emitAtMs)
+        r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+            r.sentinels(plan, flush, p.max)(sentinelEvents(s, "click")))
+      }.where(col("user_id") >= 0)
         .select(col("user_id"), col("rank"), col("val_cents"),
           col("event_id"))
         .orderBy("user_id", "rank")
@@ -417,35 +310,12 @@ object EventQueries {
     // oracle replays.
     "q_stream_attrib" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_attrib-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val median = ev
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
-        .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_attrib")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_attrib_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoin(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      r.memory(StreamingOps.attributionJoin(stream), "append",
+        r.split(ev, "ts", p.cuts))
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("click_ts_us"))
         .orderBy("event_id", "click_id")
@@ -456,64 +326,23 @@ object EventQueries {
     // half of the join contract the inner gate can't: a purchase with no
     // qualifying click emits its null-extended row only when the WATERMARK
     // closes its match window, not when data arrives. Sentinel batches are
-    // far-future click+purchase pairs under the reserved user_id -1 (they
+    // far-future click+purchase pairs under reserved negative user_ids (they
     // must pass the event-type filters to advance BOTH sides' watermarks;
     // filtered from the output), after which every real purchase has either
     // matched or provably cannot. Hash-matches the batch LEFT JOIN oracle.
     "q_stream_outer" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_outer-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long, typ: String) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(-1L).as("user_id"), lit(typ).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_outer")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_outer_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoinOuter(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-              "purchase"))
-            // one writer task -> the pair lands as ONE file: a two-file
-            // sentinel write raced the stream's glob listing and the gate
-            // paid an extra partial micro-batch (~1-1.5 s) when the source
-            // saw the first file alone
-            .coalesce(1)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-              "purchase"))
-            .coalesce(1)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
+      // a purchase's match window spans the hour before it
+      val plan = StreamingOps.attributionJoinOuter(stream)
+      val flush = Flush(step = 2.hours, reach = 1.hour)
+      r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(plan, flush, p.max)(
+            sentinelEvents(s, "click", "purchase")))
+        .where(col("user_id") >= 0)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("click_ts_us"))
         .orderBy("event_id", "click_id")
@@ -534,58 +363,16 @@ object EventQueries {
     // coalesced user column all hash-fail.
     "q_stream_full_outer" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_fouter-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long, typ: String) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit(typ).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_full_outer")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_full_outer_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoinFullOuter(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-              "purchase"))
-            // one writer task -> the pair lands as ONE file: a two-file
-            // sentinel write raced the stream's glob listing and the gate
-            // paid an extra partial micro-batch (~1-1.5 s) when the source
-            // saw the first file alone
-            .coalesce(1)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-              "purchase"))
-            .coalesce(1)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      // a click can still match a purchase up to an hour after it
+      val plan = StreamingOps.attributionJoinFullOuter(stream)
+      val flush = Flush(step = 2.hours, reach = 1.hour)
+      r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(plan, flush, p.max)(
+            sentinelEvents(s, "click", "purchase")))
         .where(coalesce(col("user_id"), col("c_user")) >= 0)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("c_user"), col("click_ts_us"))
@@ -603,55 +390,17 @@ object EventQueries {
     // oracle.
     "q_stream_tumbling" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_tumb-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_tumbling")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
-      val qn = s"q_stream_tumbling_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.tumblingCounts(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          // sentinel offsets must clear (watermark delay 1h + window reach
-          // 1h) from sentinel1 ALONE: every real window must flush during
-          // sentinel2's DATA batch — the engine sessions disable no-data
-          // micro-batches (r21), so no trailing batch runs after b4. At the
-          // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
-          // below the last window's end and its rows never emitted.
-          sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("event_type") =!= "_sentinel")
+      // 1h watermark delay; the last window closes up to 1h past maxTs
+      val plan = StreamingOps.tumblingCounts(stream)
+      val flush = Flush(step = 3.hours, reach = 1.hour)
+      r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(plan, flush, p.max)(sentinelEvents(s, "_sentinel")))
+        .where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))
         .orderBy("ws_us", "event_type")
     },
@@ -665,55 +414,17 @@ object EventQueries {
     // the watermark. Hash-matches the batch sliding oracle.
     "q_stream_sliding" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_slide-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val r = GatedReplay(s, "q_stream_sliding")
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
-      val qn = s"q_stream_sliding_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.slidingCounts(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          // sentinel offsets must clear (watermark delay 1h + window reach
-          // 1h) from sentinel1 ALONE: every real window must flush during
-          // sentinel2's DATA batch — the engine sessions disable no-data
-          // micro-batches (r21), so no trailing batch runs after b4. At the
-          // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
-          // below the last window's end and its rows never emitted.
-          sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("event_type") =!= "_sentinel")
+      // 1h watermark delay; the last 1h window closes up to 1h past maxTs
+      val plan = StreamingOps.slidingCounts(stream)
+      val flush = Flush(step = 3.hours, reach = 1.hour)
+      r.memory(plan, "append", r.split(ev, "ts", p.cuts) ++
+          r.sentinels(plan, flush, p.max)(sentinelEvents(s, "_sentinel")))
+        .where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))
         .orderBy("ws_us", "event_type")
     },
@@ -730,50 +441,31 @@ object EventQueries {
     // packed string, unpacked to typed longs at the output boundary.
     "q_stream_upsert" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_upsert-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val r = GatedReplay(s, "q_stream_upsert")
       // Split on the MICROSECOND value (the payload granularity), not raw
       // nanos: two events sharing a ts_us must land in the same batch, or
       // the cross-epoch blind overwrite could pick the wrong side of an
       // event_id tiebreak that straddles the boundary.
-      val median = ev
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts div 1000) AS BIGINT)")
-        .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/in/*.parquet")
+      val p = GatedReplay.prelude(ev, "ts div 1000", 0.5)
+      val stream = r.fileStream(ev.schema)
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
       @volatile var prevSnap: Option[String] = None
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream
+      r.run(r.split(ev, "ts div 1000", p.cuts)) {
+        stream.writeStream
           .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
             val delta = b.groupBy(col("user_id"))
               .agg(max_by(concat_ws("|", col("ts_us"), col("val_cents")),
                 struct(col("ts_us"), col("event_id"))).as("last"))
             val base = prevSnap.map(p => s.read.parquet(p)).getOrElse(
               s.range(0).select(col("id").as("user_id"), lit("").as("last")))
-            val out = s"$tmp/snap/e$id"
+            val out = s"${r.dir}/snap/e$id"
             graft.operators.KvSink.upsert(base, delta)
               .write.mode("overwrite").parquet(out)
             prevSnap = Some(out)
           }
-          .option("checkpointLocation", s"$tmp/ckpt")
+          .option("checkpointLocation", s"${r.dir}/ckpt")
           .start()
-        try {
-          ev.where(expr("ts div 1000") <= median)
-            .write.parquet(s"$tmp/in/b1.parquet")
-          q.processAllAvailable()
-          ev.where(expr("ts div 1000") > median)
-            .write.parquet(s"$tmp/in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
       }
       s.read.parquet(prevSnap.get)
         .select(col("user_id"),
@@ -793,34 +485,15 @@ object EventQueries {
     // content equality with the source table.
     "q_stream_sink" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
-      val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sink-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val in = s"$tmp/in"
-      val out = s"$tmp/out"
-      val median = ev
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
-        .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$in/*.parquet")
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream
+      val r = GatedReplay(s, "q_stream_sink")
+      val out = s"${r.dir}/out"
+      val p = GatedReplay.prelude(ev, "ts", 0.5)
+      r.run(r.split(ev, "ts", p.cuts)) {
+        r.fileStream(ev.schema).writeStream
           .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-            graft.streaming.StreamingOps.epochSink(out)(b, id))
-          .option("checkpointLocation", s"$tmp/ckpt")
+            StreamingOps.epochSink(out)(b, id))
+          .option("checkpointLocation", s"${r.dir}/ckpt")
           .start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$in/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
       }
       def sinkStats() = s.read.parquet(out).drop("epoch")
         .agg(count(lit(1)), sum(cents(col("value")))).head()
@@ -831,7 +504,7 @@ object EventQueries {
         .map(_.getName.stripPrefix("epoch=").toLong)
       val last = epochs.max
       val lastDf = s.read.parquet(s"$out/epoch=$last").localCheckpoint()
-      graft.streaming.StreamingOps.epochSink(out)(lastDf, last)
+      StreamingOps.epochSink(out)(lastDf, last)
       val after = sinkStats()
       s.read.parquet(out)
         .groupBy(col("event_type"))

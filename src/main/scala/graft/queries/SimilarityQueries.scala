@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.Portable._
 import graft.operators.SimilarityOps
+import graft.streaming.GatedReplay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -256,35 +257,22 @@ object SimilarityQueries {
       }
       graft.sources.Sinks.ensureDir(s, s"$annBase/stream_asg",
         "v1:stream_ann_asg", inputs = inputs) {
-        // session-unique work dir: concurrent builders cannot collide,
+        // writer-unique replay dir: concurrent builders cannot collide,
         // and the ensure* layer arbitrates who publishes
-        val tmp = new java.io.File(s"$annBase/work-${System.nanoTime()}")
-        tmp.mkdirs()
-        val st = s"$tmp/state"
-        val schema = batch(4).schema
-        def start() = s.readStream.schema(schema)
-          .parquet(s"$tmp/in/*.parquet")
+        val r = GatedReplay(s, "q_stream_ann")
+        val st = s"${r.dir}/state"
+        def start() = r.fileStream(batch(4).schema)
           .writeStream
           .foreachBatch { (b: DataFrame, epochId: Long) =>
             annIngestBatch(st, s"$base/cents", b, epochId,
               compactEvery = 2)
           }
-          .option("checkpointLocation", s"$tmp/ckpt")
+          .option("checkpointLocation", s"${r.dir}/ckpt")
           .start()
-        graft.streaming.StreamingOps.withStreamShuffle(s) {
-          val q1 = start()
-          try {
-            batch(4).write.parquet(s"$tmp/in/b1.parquet")
-            q1.processAllAvailable()
-          } finally q1.stop()
-          // KILL/RESTART: a fresh query on the SAME checkpoint — epoch
-          // ids continue, the landed epoch is not re-delivered
-          val q2 = start()
-          try {
-            batch(9).write.parquet(s"$tmp/in/b2.parquet")
-            q2.processAllAvailable()
-          } finally q2.stop()
-        }
+        r.run(Seq(r.land(batch(4))))(start())
+        // KILL/RESTART: a fresh query on the SAME checkpoint — epoch
+        // ids continue, the landed epoch is not re-delivered
+        r.run(Seq(r.land(batch(9))))(start())
         require(AnnIndex.activeRanges(s, st) == Seq((0L, 1L)),
           s"restart must continue epoch ids and the 2-epoch fold must " +
             s"have consolidated — got ${AnnIndex.activeRanges(s, st)}")
@@ -297,11 +285,7 @@ object SimilarityQueries {
           s"index must hold exactly the streamed assignments " +
             s"($nIdx != $nBatches) — a dropped or double-folded epoch")
         idx.write.mode("overwrite").parquet(s"$annBase/stream_asg")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(tmp)
+        r.release()
       }
       val assigned = s.read.parquet(s"$base/asg_base")
         .unionByName(s.read.parquet(s"$annBase/stream_asg"))

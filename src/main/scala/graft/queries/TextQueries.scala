@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.Portable._
 import graft.operators.TextOps
+import graft.streaming.{GatedReplay, StreamingOps}
 import org.apache.spark.sql.functions._
 
 /** The gated text queries: bindings of the reusable
@@ -48,33 +49,11 @@ object TextQueries {
     // each batch.
     "q_stream_wordcount" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_wc-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val median = docs
-        .selectExpr(
-          "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
-        .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
-      val qn = s"q_stream_wordcount_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.wordcountStream(stream)
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          docs.where(col("doc_id") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).select(col("word"), col("cnt")).orderBy("word")
+      val r = GatedReplay(s, "q_stream_wordcount")
+      val p = GatedReplay.prelude(docs, "doc_id", 0.5)
+      r.memory(StreamingOps.wordcountStream(r.fileStream(docs.schema)),
+        "complete", r.split(docs, "doc_id", p.cuts))
+        .select(col("word"), col("cnt")).orderBy("word")
     },
 
     "text_langid" -> { (s, dir) =>
